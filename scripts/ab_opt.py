@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Interleaved A/B of two build jars on an arbitrary query list (r11
-optimization round). Same machinery as ab_attrib.py (java -cp spark
-jars + build jar, graft.Bench with SPARK_GRAFT_QUERIES), generalized:
+optimization round): java -cp spark jars + build jar, graft.Bench
+with SPARK_GRAFT_QUERIES.
 
 Usage: ab_opt.py BEFORE_JAR AFTER_JAR "q1,q2,..." [rounds] [out.json]
 

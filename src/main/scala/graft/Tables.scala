@@ -242,7 +242,7 @@ object Tables {
   }
 
   /** Scopes AQE's coalescing knob for driver-paced iteration loops
-    * (pointer-doubling closures, connected-components rounds): the
+    * (the registry closure, connected-components rounds): the
     * session-level `parallelismFirst=true` is right for MB-scale
     * document-scan shuffles (see Bench.scala) but multiplies the
     * fixed per-round task-dispatch cost of KB-scale iteration frames
@@ -252,11 +252,8 @@ object Tables {
     * flipping it off inside the loop is also right: iteration state
     * is metadata-sized next to the corpus, and size-based coalescing
     * still widens genuinely large rounds.
-    */
-  def withIterConf[T](s: SparkSession)(body: => T): T =
-    withIterConf(s, staticPlans = false)(body)
-
-  /** `staticPlans = true` additionally turns AQE OFF and pins a small
+    *
+    * `staticPlans = true` additionally turns AQE OFF and pins a small
     * static shuffle width for the scope — for loops whose join
     * strategies are already decided by count-gated broadcast hints
     * (the registry closures): AQE's stage-by-stage re-optimization
@@ -264,8 +261,8 @@ object Tables {
     * ~45 → ~29 jobs on reg_refs_closure) while its runtime statistics
     * cannot beat the loop's own EXACT convergence counts — see
     * [[iterWidth]], which those loops call per round. Loops that rely
-    * on AQE's runtime join re-selection (ccStar's alternations, whose
-    * per-round frames have no count-gated hints) keep the default.
+    * on AQE's runtime join re-selection (the CC cores above their
+    * broadcast gate) pass `false`.
     */
   def withIterConf[T](s: SparkSession, staticPlans: Boolean)(body: => T): T = {
     // parallelismFirst=false alone regressed the closure family 3x at

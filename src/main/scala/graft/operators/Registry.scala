@@ -680,39 +680,39 @@ object Registry {
           floor(col("doc_id") / 3).cast("bigint").as("parent")))
   }
 
-  /** All (doc, transitive ancestor) pairs by SEMI-NAIVE frontier
-    * expansion: each round joins only the newly-discovered pairs
-    * against the direct edge list, so per-round join work is
-    * |frontier| · avg-outdegree and the whole run touches
-    * O(|closure|) join rows. The r6–r10 form was pointer doubling
-    * (closure ∘ closure, O(log depth) rounds) — measured at sf10 it
-    * is the wrong trade on hub-heavy DAGs: the self-join intermediate
-    * is Σ_mid descendants(mid)·ancestors(mid) ≈ N·log³N (small-id hub
-    * nodes have ~N/id descendants), ~5.7e9 rows at 500k docs vs
-    * semi-naive's ~18M, and the closure family burned ~1,900
-    * task-seconds per query there (35–58× the sf1 cost at 10× data).
-    * Depth-many rounds (19 at sf10, ~25 at 100 TB) of KB-to-MB-scale
-    * jobs cost far less than the hub blowup — [[Tables.withIterConf]]
-    * coalesces the tiny round shuffles.
+  /** Transitive closure of a (child, parent) edge set WITH hop depth:
+    * every (doc_id, anc, d) where `anc` is reachable from `doc_id` in
+    * d ≥ 1 edges and d is the EXACT min-hop distance. The single
+    * closure loop behind [[refsClosure]], [[depDepth]], [[refCycles]]
+    * and [[gcCandidates]]; callers that need only reachability select
+    * (doc_id, anc).
     *
-    * Per round: frontier ⋈ edges (one hash shuffle on mid), an
-    * anti-join against closure-so-far to keep only new pairs (the
-    * BFS dedup that also terminates cycles), and one union append.
+    * SEMI-NAIVE frontier expansion: each round joins only the
+    * newly-discovered pairs against the step relation, so per-round
+    * join work is |frontier| · avg-outdegree and the whole run touches
+    * O(|closure|) join rows. The r6–r10 forms were pointer doubling
+    * and min-plus squaring (closure ∘ closure, O(log depth) rounds) —
+    * measured at sf10 they are the wrong trade on hub-heavy DAGs: the
+    * self-join intermediate is Σ_mid descendants(mid)·ancestors(mid)
+    * ≈ N·log³N (small-id hub nodes have ~N/id descendants), ~5.7e9
+    * rows at 500k docs vs semi-naive's ~18M, and the closure family
+    * burned ~1,900 task-seconds per query there (35–58× the sf1 cost
+    * at 10× data). Depth-many rounds (19 at sf10, ~25 at 100 TB) of
+    * KB-to-MB-scale jobs cost far less than the hub blowup —
+    * [[Tables.withIterConf]] coalesces the tiny round shuffles.
+    *
+    * Per round: frontier ⋈ step (one hash shuffle on mid), an
+    * anti-join against closure-so-far to keep only new pairs (the BFS
+    * dedup that also terminates cycles), and a min(d) per fresh pair.
     * The frontier count is the convergence witness (empty frontier =
-    * fixpoint). localCheckpoint per round keeps the plan flat and the
-    * superseded round's blocks are freed as soon as the new round is
-    * materialized (GraftShim.freeCheckpoint).
+    * fixpoint). Cyclic graphs converge too: the pair set is finite and
+    * the anti-join empties the frontier once every reachable pair is
+    * known; a cycle just makes its nodes self-reachable, at d = the
+    * shortest cycle through the node. localCheckpoint per round keeps
+    * the plan flat, and the pre-loop frames are freed as soon as the
+    * step relation is materialized (GraftShim.freeCheckpoint).
     */
-  private def closurePairs(s: SparkSession, dir: String): DataFrame =
-    closurePairsOf(s, refEdges(s, dir))
-
-  /** [[closurePairs]] generalized to any (child, parent) edge set —
-    * semi-naive BFS converges on cyclic graphs too (the pair set is
-    * finite and the anti-join empties the frontier once every
-    * reachable pair is known; a cycle just makes nodes
-    * self-reachable), which is what [[refCycles]] relies on.
-    */
-  private def closurePairsOf(s: SparkSession, edges: DataFrame): DataFrame = Tables.withIterConf(s, staticPlans = true) {
+  private[graft] def closure(s: SparkSession, edges: DataFrame): DataFrame = Tables.withIterConf(s, staticPlans = true) {
     // Widen BEFORE the first materialization (r12, ADVICE r11): the
     // staticPlans scope pins shuffle.partitions=8, which is right for
     // the KB-scale round frames but would serialize the edge distinct
@@ -725,26 +725,42 @@ object Registry {
     val e = edges
       .select(col("child").as("doc_id"), col("parent").as("anc"))
       .distinct().transform(Tables.iterCheckpoint)
-    // STRIDE-4 step relation (r12; stride-2 in r11): one self-join
-    // widens the step set to "reachable in 1-2 edges", squaring THAT
-    // widens it to "reachable in 1-4 edges" — the BFS then needs
+    // STRIDE-4 step relation carrying its EXACT min distance (r12;
+    // stride-2 in r11): direct edges at d=1 and two-hop pairs at d=2,
+    // min(d) per pair — a pair reached both directly and in two hops
+    // keeps d=1, so d is exact within the ≤2 window. Squaring step2
+    // then yields every pair at min distance ≤4 with exact d — a
+    // composition's d1+d2 is a real path length (≥ the true min m),
+    // and splitting a shortest path of length m ≤ 4 into halves of
+    // lengths a, b ≤ 2 gives step2 entries with d1 ≤ a, d2 ≤ b, so
+    // d1+d2 ≤ m and the min-per-pair is exactly m. The BFS then needs
     // ⌈depth/4⌉ rounds instead of depth, and the loop's cost here is
     // the per-round FIXED cost (driver-paced jobs over KB-MB frames;
-    // measured ~0.3s/round at sf0.1), not bytes. Each squaring costs
-    // about one round and composition preserves reachability exactly
-    // (any path decomposes into stride-≤4 steps). Step-set growth is
+    // measured ~0.3s/round at sf0.1), not bytes. Step-set growth is
     // out-degree-bounded (≤ Σ_{h≤4} outdeg^h distinct values, far
     // fewer after value dedup on the /2-/3 DAG — measured ~2x edges).
-    val step2 = e.unionAll(
-      e.select(col("doc_id"), col("anc").as("mid"))
+    //
+    // Exactness of the loop: because a round spans four BFS layers, d
+    // rides the loop joins (d' = d_frontier + d_step, min per fresh
+    // pair) instead of being stamped from the round index. A shortest
+    // path of length L has a prefix of length L-4 whose min-dist is
+    // exactly L-4 (else a shorter a→c path would exist), that prefix
+    // is in the previous frontier with exact d by induction, and the
+    // 4-step suffix is in the step relation at its exact ≤4 distance
+    // — so min over a round's candidates is the true min distance,
+    // and the per-round anti-join discards longer rediscoveries.
+    val step2 = e.select(col("doc_id"), col("anc"), lit(1L).as("d"))
+      .unionAll(e.select(col("doc_id"), col("anc").as("mid"))
         .join(e.select(col("doc_id").as("mid"), col("anc")), "mid")
-        .select(col("doc_id"), col("anc")))
-      .distinct().transform(Tables.iterCheckpoint)
+        .select(col("doc_id"), col("anc"), lit(2L).as("d")))
+      .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
+      .transform(Tables.iterCheckpoint)
     val step = step2.unionAll(
-      step2.select(col("doc_id"), col("anc").as("mid"))
-        .join(step2.select(col("doc_id").as("mid"), col("anc")), "mid")
-        .select(col("doc_id"), col("anc")))
-      .distinct().transform(Tables.iterCheckpoint)
+      step2.select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
+        .join(step2.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds")), "mid")
+        .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d")))
+      .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
+      .transform(Tables.iterCheckpoint)
     // Closure-so-far stays a UNION VIEW of the per-round frontier
     // checkpoints — each pair is checkpoint-written exactly once, in
     // the round that discovered it. Re-materializing the unioned
@@ -762,29 +778,31 @@ object Registry {
     // Adaptive broadcasts (r11): the loop's convergence counts give
     // the driver EXACT row counts for both join inputs at no extra
     // cost, so each round broadcasts the step relation and the
-    // closure-so-far anti-join side while they fit ([[BcastRows]]) —
-    // the hop and the anti-filter then run in the frontier's own
-    // partitions and the round's only exchange is the distinct. A
-    // graph too big to broadcast (100 TB reference graphs) falls back
-    // to exactly the former shuffle form, per side, per round.
-    val stepBcast = frontierCount <= BcastRows
+    // closure-so-far anti-join side while they fit
+    // ([[Tables.BcastRows]]; sf10's ~18M-pair closure correctly falls
+    // back) — the hop and the anti-filter then run in the frontier's
+    // own partitions and the round's only exchange is the min(d)
+    // aggregate. A graph too big to broadcast (100 TB reference
+    // graphs) falls back to the shuffle form, per side, per round.
+    val stepBcast = frontierCount <= Tables.BcastRows
     var closureCount = frontierCount
     while (frontierCount > 0) {
       Tables.iterWidth(s, closureCount)
-      // stride-2 extension of the NEW pairs only, against the step
-      // relation. No pre-join distinct: the anti-join passes
-      // duplicates through and the post-join distinct rides the
-      // join's (doc_id, anc) hash partitioning — one wide shuffle per
-      // round, not two.
-      val stepSide = step.select(col("doc_id").as("mid"), col("anc"))
-      val hop = frontier.select(col("doc_id"), col("anc").as("mid"))
+      // stride-4 extension of the NEW pairs only, against the step
+      // relation. No pre-join dedup: the anti-join passes duplicates
+      // through and the min(d) aggregate rides the join's (doc_id,
+      // anc) hash partitioning — one wide shuffle per round, not two.
+      val stepSide = step.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds"))
+      val hop = frontier
+        .select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
         .join(if (stepBcast) broadcast(stepSide) else stepSide, "mid")
-        .select(col("doc_id"), col("anc"))
-      val closure = rounds.reduce(_ unionAll _)
+        .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d"))
+      val known = rounds.reduce(_ unionAll _).select(col("doc_id"), col("anc"))
       val fresh = hop
-        .join(if (closureCount <= BcastRows) broadcast(closure) else closure,
+        .join(if (closureCount <= Tables.BcastRows) broadcast(known) else known,
           Seq("doc_id", "anc"), "left_anti")
-        .distinct().transform(Tables.iterCheckpoint)
+        .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
+        .transform(Tables.iterCheckpoint)
       frontierCount = fresh.count() // materializes fresh; old frontier's last read
       frontier = fresh
       closureCount += frontierCount
@@ -792,12 +810,6 @@ object Registry {
     }
     rounds.reduce(_ unionAll _)
   }
-
-  /** Row bound under which the closure loops broadcast a join side
-    * (sf10's ~18M-pair closure correctly falls back to the shuffle
-    * form) — the shared loop constant, see [[Tables.BcastRows]].
-    */
-  private val BcastRows = Tables.BcastRows
 
   /** Transitive reference closure per document (the resolution set a
     * registry materializes to answer "what does this schema pull in"
@@ -808,106 +820,22 @@ object Registry {
     */
   def refsClosure(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select(col("doc_id"))
-      .join(closurePairs(s, dir), Seq("doc_id"), "left")
+      .join(closure(s, refEdges(s, dir)).select(col("doc_id"), col("anc")),
+        Seq("doc_id"), "left")
       .groupBy(col("doc_id"))
       .agg(count(col("anc")).as("n_ancestors"), max(col("anc")).as("max_anc"))
       .orderBy(col("doc_id"))
-
-  /** Dependency graph WITH hop depth (buildDependencyTree,
-    * tools_validation.go:295 walks references to maxDepth): the
-    * semi-naive closure carrying min-hop distance as the BFS layer
-    * number. Init: direct edges at d=1; round r extends only the
-    * frontier one edge, and a pair first discovered in round r has
-    * EXACT min-distance r (unit-weight BFS invariant; the anti-join
-    * against closure-so-far discards longer rediscoveries). The
-    * empty frontier is the convergence witness. Replaces the r6–r10
-    * min-plus matrix squaring for the same hub-blowup reason as
-    * [[closurePairsOf]] — squaring composes every (path≤2^r, path≤2^r)
-    * pair through hub mids, and min-plus cannot even dedup the
-    * intermediate before the groupBy. Same flat-lineage and
-    * freed-superseded-round discipline.
-    */
-  private def closureDepths(s: SparkSession, dir: String): DataFrame = Tables.withIterConf(s, staticPlans = true) {
-    // pre-loop width from the edge scan's footer bound — see
-    // [[closurePairsOf]] (r12, ADVICE r11)
-    val edges0 = refEdges(s, dir)
-    Tables.footerRowBound(edges0).foreach(n => Tables.iterWidth(s, 2 * n))
-    val e = edges0
-      .select(col("child").as("doc_id"), col("parent").as("anc"))
-      .distinct().transform(Tables.iterCheckpoint)
-    // STRIDE-4 step relation carrying its EXACT min distance (r12;
-    // stride-2 in r11): direct edges at d=1, two-hop pairs WITHOUT a
-    // direct edge at d=2 (the anti-join makes d exact within the ≤2
-    // window); squaring step2 then yields every pair at min distance
-    // ≤4 with exact d — a composition's d1+d2 is a real path length
-    // (≥ the true min m), and splitting a shortest path of length
-    // m ≤ 4 into halves of lengths a, b ≤ 2 gives step2 entries with
-    // d1 ≤ a, d2 ≤ b (step2 d's are exact global minima ≤ 2), so
-    // d1+d2 ≤ m and the min-per-pair is exactly m. Same ⌈depth/4⌉
-    // round count win as [[closurePairsOf]]; because a round now
-    // spans four BFS layers, d rides the loop joins (d' = d_frontier
-    // + d_step, min per fresh pair) instead of being stamped from the
-    // round index. Exactness of the loop: a shortest path of length L
-    // has a prefix of length L-4 whose min-dist is exactly L-4 (else
-    // a shorter a→c path would exist), that prefix is in the previous
-    // frontier with exact d by induction, and the 4-step suffix is in
-    // the step relation at its exact ≤4 distance — so min over a
-    // round's candidates is the true min distance, and the per-round
-    // anti-join still discards longer rediscoveries of earlier pairs.
-    val twoHop = e.select(col("doc_id"), col("anc").as("mid"))
-      .join(e.select(col("doc_id").as("mid"), col("anc")), "mid")
-      .select(col("doc_id"), col("anc"))
-      .join(e, Seq("doc_id", "anc"), "left_anti")
-      .distinct()
-    val step2 = e.select(col("doc_id"), col("anc"), lit(1L).as("d"))
-      .unionAll(twoHop.select(col("doc_id"), col("anc"), lit(2L).as("d")))
-      .transform(Tables.iterCheckpoint)
-    val step = step2.unionAll(
-      step2.select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
-        .join(step2.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds")), "mid")
-        .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d")))
-      .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
-      .transform(Tables.iterCheckpoint)
-    val rounds = scala.collection.mutable.ListBuffer(step)
-    var frontier = step
-    var frontierCount = frontier.count() // materializes e → step2 → step
-    org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(e)
-    org.apache.spark.sql.graftshim.GraftShim.freeCheckpoint(step2)
-    // same adaptive broadcasts as [[closurePairsOf]] — counts are
-    // exact and driver-known from the convergence probes
-    val stepBcast = frontierCount <= BcastRows
-    var closureCount = frontierCount
-    while (frontierCount > 0) {
-      Tables.iterWidth(s, closureCount)
-      val stepSide = step.select(col("doc_id").as("mid"), col("anc"), col("d").as("ds"))
-      val hop = frontier
-        .select(col("doc_id"), col("anc").as("mid"), col("d").as("df"))
-        .join(if (stepBcast) broadcast(stepSide) else stepSide, "mid")
-        .select(col("doc_id"), col("anc"), (col("df") + col("ds")).as("d"))
-      val closure = rounds.reduce(_ unionAll _).select(col("doc_id"), col("anc"))
-      val fresh = hop
-        .join(if (closureCount <= BcastRows) broadcast(closure) else closure,
-          Seq("doc_id", "anc"), "left_anti")
-        .groupBy(col("doc_id"), col("anc")).agg(min(col("d")).as("d"))
-        .transform(Tables.iterCheckpoint)
-      frontierCount = fresh.count()
-      frontier = fresh
-      closureCount += frontierCount
-      if (frontierCount > 0) rounds += fresh
-    }
-    rounds.reduce(_ unionAll _)
-  }
 
   /** Per-document dependency-tree report (tools_validation.go:295):
     * ancestor count, tree depth (max min-hop distance), and how many
     * ancestors sit within maxDepth=2 — the truncation the reference
     * applies when rendering the tree. Docs without references report
     * 0/0/0 via the left join. Oracle: recursive CTE carrying depth,
-    * min() per (doc, anc) — parity proves the min-plus squaring.
+    * min() per (doc, anc) — parity proves the [[closure]] depths.
     */
   def depDepth(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select(col("doc_id"))
-      .join(closureDepths(s, dir), Seq("doc_id"), "left")
+      .join(closure(s, refEdges(s, dir)), Seq("doc_id"), "left")
       .groupBy(col("doc_id"))
       .agg(count(col("anc")).as("n_ancestors"),
         coalesce(max(col("d")), lit(0L)).as("depth"),
@@ -924,11 +852,11 @@ object Registry {
     * every strongly-connected component of size ≥ 1 that contains a
     * cycle: (cycle_id = min member, member, component size).
     *
-    * Scale: reachability via the shared pointer-doubling core
-    * ([[closurePairsOf]] — O(log diameter) rounds, converges on
-    * cyclic graphs since the pair set is finite); SCC membership is
-    * one self-join of the closure with its transpose (mutual reach),
-    * then a min-label rollup. Reference graphs are metadata-sized
+    * Scale: reachability via the shared semi-naive [[closure]] (a
+    * stride-4 BFS, ⌈diameter/4⌉ rounds; it converges on cyclic graphs
+    * since the pair set is finite), projected to (doc_id, anc) before
+    * SCC membership: one self-join of the closure with its transpose
+    * (mutual reach), then a min-label rollup. Reference graphs are metadata-sized
     * next to the corpus, and ancestor sets are log-bounded, so the
     * closure frame stays small at any corpus scale.
     */
@@ -942,9 +870,9 @@ object Registry {
       .join(docs.select(col("doc_id").as("child")), Seq("child"), "left_semi")
       .join(docs.select(col("doc_id").as("parent")), Seq("parent"), "left_semi")
       .select(col("child"), col("parent"))
-    val closure = closurePairsOf(s, refEdges(s, dir).union(ring))
-    val mutual = closure
-      .join(closure.select(col("anc").as("doc_id"), col("doc_id").as("anc")),
+    val reach = closure(s, refEdges(s, dir).union(ring)).select(col("doc_id"), col("anc"))
+    val mutual = reach
+      .join(reach.select(col("anc").as("doc_id"), col("doc_id").as("anc")),
         Seq("doc_id", "anc"))
     val scc = mutual.groupBy(col("doc_id")).agg(min(col("anc")).as("cycle_id"))
     // component size via a window over cycle_id, not a groupBy+join:
@@ -1046,7 +974,7 @@ object Registry {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     val live = docs.filter(col("doc_id") % 7 =!= 0)
     val deleted = docs.filter(col("doc_id") % 7 === 0)
-    val depCounts = closurePairs(s, dir)
+    val depCounts = closure(s, refEdges(s, dir)).select(col("doc_id"), col("anc"))
       .join(live, Seq("doc_id"), "left_semi")
       .groupBy(col("anc")).agg(count(lit(1)).as("dep_n"))
     deleted.join(depCounts, col("doc_id") === col("anc"), "left")

@@ -183,7 +183,7 @@ object Similarity {
     * broadcast-1-row-params idiom, different cell-count driver.
     */
   private def bucketsNp(e: DataFrame, nExpr: String,
-                        nLit: Option[Long] = None): DataFrame = {
+                        nLit: Option[Long]): DataFrame = {
     def proj(npTerm: String) =
       s"""transform(sequence(0, ${NTables - 1}), t ->
          |  aggregate(sequence(0, ($npTerm) - 1), cast(0 AS bigint), (acc, p) ->

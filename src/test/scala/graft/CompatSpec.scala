@@ -427,7 +427,6 @@ class CompatSpec extends SparkSpec {
   }
 
   test("compat_multi: per-subject verdicts + all_compatible rollup reconcile") {
-    import org.apache.spark.sql.functions.col
     val rows = operators.Compat.compatMulti(spark, sfDir).collect()
     val (grand, per) = rows.partition(_.getAs[Long]("subject") == -1L)
     assert(grand.length == 1, "exactly one all_compatible rollup row")

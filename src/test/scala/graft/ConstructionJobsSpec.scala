@@ -20,17 +20,14 @@ class ConstructionJobsSpec extends SparkSpec {
     * stages is decided by the data. Everything else must be lazy.
     */
   private val iterative = Set(
-    // registry graph fixpoints (pointer-doubling / closure loops)
+    // registry graph fixpoints (the semi-naive closure loop)
     "reg_refs_closure", "reg_dep_depth", "reg_gc_candidates",
-    "reg_ref_cycles", "reg_pagerank", "reg_change_advice",
+    "reg_ref_cycles",
     // connected-components loops and their consumers
     "dedup_clusters", "dedup_cluster_stats", "dedup_survivors",
-    "dedup_semantic_clusters", "dedup_semantic_rate", "corpus_funnel",
-    // iterative ANN / embedding loops
-    "ann_nn_descent", "ann_graph_recall", "ann_nn_graph",
-    "emb_centroids", "emb_assign", "emb_pca_power",
-    // BPE merge rounds are sequential by definition
-    "tok_merge_apply"
+    "dedup_semantic_clusters", "corpus_funnel",
+    // iterative ANN loops
+    "ann_nn_descent", "ann_graph_recall"
   )
 
   test("constructing every registered query launches zero jobs (iterative ops excepted)") {

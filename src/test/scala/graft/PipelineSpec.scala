@@ -38,22 +38,38 @@ class PipelineSpec extends SparkSpec {
     assert(rounds <= 15, s"star took $rounds rounds — not logarithmic in $n")
     val l = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l.size == n && l.values.forall(_ == 0L), "chain must collapse to one cluster rooted at 0")
-    // the same chain defeats min-label propagation: still iterating
-    // at a cap far beyond ccStar's convergence (diameter-bound rounds)
+    // a cap below convergence throws instead of returning a non-fixpoint
+    intercept[IllegalStateException](Pipeline.ccStar(chain, maxIter = 1))
+    // label prop's side of the same chain: the fallback spec below
+  }
+
+  test("label prop falls back to the star core when the chain outlasts its cap") {
+    val n = 1000L
+    val chain = spark.range(n - 1).select(col("id").as("src"), (col("id") + lit(1)).as("dst"))
     val sym = chain.union(chain.select(col("dst").as("src"), col("src").as("dst")))
-    val (_, lpRounds) = Pipeline.ccLabelProp(sym, maxIter = 25)
-    assert(lpRounds == 25, "label prop should still be iterating at the cap on this chain")
+    // 25 label-prop rounds cover 25 hops of a 999-hop chain: only the
+    // ccStar fallback can return the single cluster rooted at 0
+    val (labels, _) = Pipeline.ccLabelProp(sym, maxIter = 25)
+    val l = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(l.size == n && l.values.forall(_ == 0L), "chain must collapse to one cluster rooted at 0")
   }
 
   test("star variant reproduces the label-prop clusters on the real LSH pair graph") {
-    val base = Pipeline.dedupClusters(spark, sfDir).collect()
-      .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("doc_id"), r.getAs[Long]("n_docs"))).toSet
-    spark.conf.set("graft.clusters.algo", "star")
+    val edges = Dedup.minhashLsh(spark, sfDir)
+      .selectExpr("""explode(array(
+        |  named_struct('src', doc_a, 'dst', doc_b),
+        |  named_struct('src', doc_b, 'dst', doc_a))) AS e""".stripMargin)
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .cache()
     try {
-      val star = Pipeline.dedupClusters(spark, sfDir).collect()
-        .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("doc_id"), r.getAs[Long]("n_docs"))).toSet
-      assert(star == base, "the two CC algorithms must reach the same fixpoint")
-    } finally spark.conf.unset("graft.clusters.algo")
+      val nEdges = edges.count()
+      def labelSet(cc: (org.apache.spark.sql.DataFrame, Int)) =
+        cc._1.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+      val lp = labelSet(Pipeline.ccLabelProp(edges, edgeRowsHint = Some(nEdges)))
+      val star = labelSet(Pipeline.ccStar(edges, edgeRowsHint = Some(nEdges)))
+      assert(lp.nonEmpty)
+      assert(star == lp, "the two CC cores must reach the same fixpoint")
+    } finally edges.unpersist()
   }
 
   test("stratified sample keeps rate-consistent counts per stratum") {
@@ -237,7 +253,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("chunk overlap: chunks cover every doc, overlap cost follows the stride") {
-    import org.apache.spark.sql.functions._
     val rows = Pipeline.chunkOverlap(spark, sfDir).collect()
     assert(rows.nonEmpty)
     val nDocs = rows.map(_.getAs[Long]("n_docs")).sum
@@ -608,7 +623,6 @@ class PipelineSpec extends SparkSpec {
     }
   }
   test("semantic rate: per-source rollup reconciles with the pair frame and the corpus") {
-    import org.apache.spark.sql.functions._
     val dupIds = operators.Dedup.embedLsh(spark, sfDir).collect()
       .flatMap(r => Seq(r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
     val docs = graft.Tables.documents(spark, sfDir)

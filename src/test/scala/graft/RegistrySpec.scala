@@ -75,6 +75,37 @@ class RegistrySpec extends SparkSpec {
     }
   }
 
+  test("closure on a cyclic graph: terminates with the exact min-hop d for every pair") {
+    // a 3-ring 1→2→3→1, a 6-edge tail 10→11→…→15→1 into it (longer
+    // than the stride-4 step, so the loop runs rounds over the cycle)
+    // and a chord 11→1, so pairs are reached by paths of several lengths
+    val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 11L -> 1L) ++
+      (10L to 14L).map(c => c -> (c + 1)) :+ (15L -> 1L)
+    val rows = Registry.closure(spark,
+        spark.createDataFrame(edges).toDF("child", "parent"))
+      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("anc"), r.getAs[Long]("d")))
+    // driver-side BFS: min hops ≥ 1 from each node to every reachable
+    // node, itself included when it sits on the ring
+    val out = edges.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2) }
+    val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct.flatMap { src =>
+      var dist = Map.empty[Long, Long]
+      var layer = out.getOrElse(src, Nil)
+      var d = 1L
+      while (layer.nonEmpty) {
+        val fresh = layer.distinct.filterNot(dist.contains)
+        fresh.foreach(v => dist += v -> d)
+        layer = fresh.flatMap(v => out.getOrElse(v, Nil))
+        d += 1
+      }
+      dist.map { case (anc, dd) => (src, anc, dd) }
+    }
+    assert(rows.length == expected.length, "one row per reachable pair")
+    assert(rows.toSet == expected.toSet)
+    assert(rows.toSet.contains((1L, 1L, 3L)), "ring nodes reach themselves in 3 hops")
+    assert(rows.toSet.contains((12L, 3L, 6L)), "mid-tail reaches 3 via 15, 1 and 2")
+    assert(rows.toSet.contains((10L, 1L, 2L)), "the chord beats the 6-hop tail path")
+  }
+
   test("search: posting-list hits bounded by query size, subject-name face works") {
     val rows = Registry.search(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"), r.getAs[Long]("n_hit")))

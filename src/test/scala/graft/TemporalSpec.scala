@@ -83,7 +83,6 @@ class TemporalSpec extends SparkSpec {
   }
 
   test("resample grid spans every minute and fill-forward never invents history") {
-    import org.apache.spark.sql.functions._
     val rows = graft.operators.Temporal.resampleFfill(spark, sfDir).collect()
     val types = rows.map(_.getAs[String]("event_type")).distinct
     val perType = rows.groupBy(_.getAs[String]("event_type"))
@@ -172,7 +171,6 @@ class TemporalSpec extends SparkSpec {
     }
   }
   test("ewma: driver-side recomputation of the truncated half-life smoother") {
-    import org.apache.spark.sql.functions._
     val rows = operators.Temporal.ewmaSmooth(spark, sfDir).collect()
     assert(rows.nonEmpty)
     val bySeries = rows.groupBy(_.getAs[String]("event_type"))
